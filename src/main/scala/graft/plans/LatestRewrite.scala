@@ -6,10 +6,10 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.IntegerType
 
-import graft.ops.{GraftFileIndex, IncrementalLatest, ManifestTable}
+import graft.ops.{IncrementalLatest, ManifestTable}
+import DefRegistry.{cols, dec, enc, qualified}
 
 /** LATEST-STATE VIEW REGISTRY — which [[IncrementalLatest]]-maintained
   * views stand for which base tables. Registration is the explicit
@@ -24,34 +24,22 @@ import graft.ops.{GraftFileIndex, IncrementalLatest, ManifestTable}
   * trusting the registration).
   *
   * DURABILITY: `register(durable = true)` persists the definition as
-  * a `mv.latest.NNNN` prop on the BASE table's manifest (the
-  * [[MvRegistry]] posture) — a fresh session's planner rediscovers
-  * the rewrite with no re-registration. */
+  * a `mv.latest.NNNN` prop on the BASE table's manifest — a fresh
+  * session's planner rediscovers the rewrite with no re-registration
+  * ([[DefRegistry]] holds the in-memory and durable-catalog
+  * contracts). */
 object LatestRegistry {
   final case class LatestDef(basePath: String, viewPath: String,
                              keys: Seq[String], ordCols: Seq[String])
 
-  private val defs = new java.util.concurrent.ConcurrentHashMap[String, Vector[LatestDef]]
-
-  private def keyOf(spark: SparkSession, basePath: String): String = {
-    val p = new Path(basePath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
-  }
-
-  private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
-
-  private val catalog = new DurableDefCatalog[LatestDef](
-    ManifestTable.MvLatestDefPropPrefix,
+  private val registry = new DefRegistry[String, LatestDef](
+    ManifestTable.MvLatestDefPropPrefix, identity, _.viewPath,
     d => Seq(enc(d.viewPath), d.keys.mkString(","), d.ordCols.mkString(",")).mkString("|"),
-    (basePath, value) => try {
+    (basePath, value) => {
       val parts = value.split('|')
-      def cols(i: Int): Seq[String] =
-        if (i >= parts.length || parts(i).isEmpty) Nil else parts(i).split(',').toSeq
-      val d = LatestDef(basePath, dec(parts(0)), cols(1), cols(2))
+      val d = LatestDef(basePath, dec(parts(0)), cols(parts, 1), cols(parts, 2))
       if (d.keys.isEmpty || d.ordCols.isEmpty) None else Some(d)
-    } catch { case scala.util.control.NonFatal(_) => None },
-    (a, b) => a.viewPath == b.viewPath)
+    })
 
   /** Declare `viewPath` a maintained latest-state view of `basePath`.
     * Re-registering the same `viewPath` replaces its definition in
@@ -65,36 +53,26 @@ object LatestRegistry {
       "LatestRegistry.register: column names must not contain ',' or '|'")
     require(keys.intersect(ordCols).isEmpty,
       "LatestRegistry.register: keys and ordCols must be disjoint")
-    val d = LatestDef(basePath, viewPath, keys, ordCols)
-    defs.compute(keyOf(spark, basePath), (_, old) =>
-      Option(old).getOrElse(Vector.empty)
-        .filterNot(_.viewPath == viewPath) :+ d)
-    if (durable)
-      catalog.persist(spark, basePath, keyOf(spark, basePath), d, retainVersions)
+    registry.register(spark, qualified(spark, new Path(basePath)), basePath,
+      LatestDef(basePath, viewPath, keys, ordCols), durable, retainVersions)
   }
 
   /** Drop every view registered for `basePath` (in-memory an EMPTY
     * SHADOW — the session really disables the rewrite rather than
     * falling through to the durable catalog). */
   def unregister(spark: SparkSession, basePath: String,
-                 durable: Boolean = false, retainVersions: Int = 2): Unit = {
-    defs.put(keyOf(spark, basePath), Vector.empty)
-    if (durable)
-      catalog.remove(spark, basePath, keyOf(spark, basePath), _ => true,
-        retainVersions)
-  }
+                 durable: Boolean = false, retainVersions: Int = 2): Unit =
+    registry.unregister(spark, qualified(spark, new Path(basePath)), basePath,
+      durable, retainVersions)
 
-  private[plans] def lookup(spark: SparkSession, root: Path): Seq[LatestDef] = {
-    val q = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(root).toString
-    Option(defs.get(q)).getOrElse(catalog.lookup(spark, root.toString, q))
-  }
+  private[plans] def lookup(spark: SparkSession, root: Path): Seq[LatestDef] =
+    registry.lookup(spark, qualified(spark, root), root.toString)
 
   /** Test hook: fresh-session simulation. */
-  private[graft] def clearInMemory(): Unit = defs.clear()
+  private[graft] def clearInMemory(): Unit = registry.clearInMemory()
 
   /** Test instrument: successful rewrites. */
-  private[graft] val rewrites = new java.util.concurrent.atomic.AtomicInteger
+  private[graft] val rewrites = registry.rewrites
 }
 
 /** AUTOMATIC LATEST-STATE VIEW REWRITE — the query side of
@@ -116,28 +94,25 @@ object LatestRegistry {
   *     contract (max_by skips null ords; the window form ranks them
   *     last — they agree only when no ord is null).
   *
-  * A rewrite fires only when the scan below is a bare, full,
-  * un-narrowed [[GraftFileIndex]] read of a REGISTERED base (identity
-  * Projects / SubqueryAlias absorbed; deterministic Filters absorbed
-  * only when they reference KEY columns alone — a key-only predicate
-  * selects whole key groups, so it commutes with per-key argmax and
-  * re-applies on the view exactly; any other filter below the window
-  * changes which row is latest and DECLINES), the window/aggregate
-  * semantics match the registered keys and order columns exactly
-  * (each order column DESCENDING NULLS LAST, in order), and the view
-  * is transactionally FRESH: scan dirs equal the base's current
-  * manifest, the view's committed `latest.base_version` folds exactly
-  * that data ([[ManifestTable.sameDataEntries]] bridges metadata-only
-  * commits), and the view's committed keys/ord props match the
-  * registration (REQUIRED present — this family records them from
+  * A rewrite fires only when the scan below resolves under the
+  * [[BaseScan]] absorption contract to a REGISTERED base with no
+  * computed Project absorbed (`identity`); absorbed filters reference
+  * KEY columns alone (a key-only predicate selects whole key groups,
+  * so it commutes with per-key argmax and re-applies on the view
+  * exactly; any other filter below the window changes which row is
+  * latest and DECLINES); the window/aggregate semantics match the
+  * registered keys and order columns exactly (each order column
+  * DESCENDING NULLS LAST, in order); and the view pins fresh
+  * ([[RewriteSupport.pin]]) with its committed keys/ord props matching
+  * the registration (REQUIRED present — this family records them from
   * day one, so absence is a mismatch, never a pass). A
   * [[WindowGroupLimit]] the optimizer inferred below the window is
   * absorbed when its spec matches and its limit keeps rank 1.
   *
-  * Injected pre-CBO; freshness is driver-side manifest metadata, no
-  * job. `spark.graft.latestRewrite.enabled=false` turns the rule off;
-  * [[LatestRegistry.rewrites]] counts successes. */
+  * Injected pre-CBO. `spark.graft.latestRewrite.enabled=false` turns
+  * the rule off; [[LatestRegistry.rewrites]] counts successes. */
 case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
+  import LatestRegistry.LatestDef
 
   private def enabled: Boolean =
     spark.conf.get("spark.graft.latestRewrite.enabled", "true").toBoolean
@@ -149,64 +124,15 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case a: Aggregate => rewriteMaxBy(a).getOrElse(a)
     }
 
-  private case class ScanInfo(root: Path, idx: GraftFileIndex,
-                              colOf: Map[ExprId, (String, org.apache.spark.sql.types.DataType)],
-                              filters: Seq[Expression])
-
-  /** Descend from the window/aggregate child to the scan, absorbing
-    * identity Projects and deterministic Filters (validated against
-    * the registered key columns in the builders). */
-  private def walk(p: LogicalPlan, fs: Seq[Expression]): Option[ScanInfo] = p match {
-    case lr: LogicalRelation => lr.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case g: GraftFileIndex if !g.isNarrowed =>
-          Some(ScanInfo(h.location.rootPaths.head, g,
-            lr.output.map(at => at.exprId -> (at.name, at.dataType)).toMap, fs))
-        case _ => None
-      }
-      case _ => None
+  /** The view pinned fresh with exactly the registered semantics. */
+  private def pin(d: LatestDef, info: BaseScan): Option[(Long, Map[String, String])] =
+    RewriteSupport.pin(spark, d.viewPath, Seq(RewriteSupport.PinBase(
+        d.basePath, info.idx, IncrementalLatest.BaseVersionProp))) { props =>
+      props.get(IncrementalLatest.KeysProp).contains(d.keys.mkString(",")) &&
+        props.get(IncrementalLatest.OrdProp).contains(d.ordCols.mkString(","))
     }
-    case Project(projList, child) => walk(child, fs).flatMap { info =>
-      val identity = projList.forall {
-        case _: AttributeReference => true
-        case Alias(_: AttributeReference, _) => true
-        case _ => false
-      }
-      if (!identity) None
-      else {
-        val m = projList.flatMap {
-          case al @ Alias(ar: AttributeReference, _) =>
-            info.colOf.get(ar.exprId).map(al.exprId -> _)
-          case _ => None
-        }.toMap
-        Some(info.copy(colOf = info.colOf ++ m))
-      }
-    }
-    case f: Filter if f.condition.deterministic => walk(f.child, fs :+ f.condition)
-    case SubqueryAlias(_, child) => walk(child, fs)
-    case _ => None
-  }
 
-  /** Scan complete+current, view folded exactly that data with
-    * exactly the registered semantics; returns the pinned view
-    * version. */
-  private def fresh(d: LatestRegistry.LatestDef, info: ScanInfo): Option[Long] = try {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bfs = new Path(d.basePath).getFileSystem(conf)
-    val vfs = new Path(d.viewPath).getFileSystem(conf)
-    for {
-      cur <- ManifestTable.versions(bfs, d.basePath).lastOption
-      if info.idx.relDirs.toSet == ManifestTable.dataDirs(spark, d.basePath, cur)
-      vv <- ManifestTable.versions(vfs, d.viewPath).lastOption
-      props = ManifestTable.readPropsAt(spark, d.viewPath, vv)
-      state <- props.get(IncrementalLatest.BaseVersionProp)
-      if props.get(IncrementalLatest.KeysProp).contains(d.keys.mkString(","))
-      if props.get(IncrementalLatest.OrdProp).contains(d.ordCols.mkString(","))
-      if ManifestTable.sameDataEntries(spark, d.basePath, state.toLong, cur)
-    } yield vv
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def physOf(info: ScanInfo, e: Expression): Option[String] = e match {
+  private def physOf(info: BaseScan, e: Expression): Option[String] = e match {
     case ar: AttributeReference => info.colOf.get(ar.exprId).map(_._1)
     case _ => None
   }
@@ -214,7 +140,7 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   /** The window's partition/order spec matches the registered def:
     * partition attrs are exactly the key set; order is each ordCol
     * DESCENDING NULLS LAST, in registration order. */
-  private def specMatches(d: LatestRegistry.LatestDef, info: ScanInfo,
+  private def specMatches(d: LatestDef, info: BaseScan,
                           partitionSpec: Seq[Expression],
                           orderSpec: Seq[SortOrder]): Boolean = {
     val partCols = partitionSpec.map(physOf(info, _))
@@ -234,13 +160,13 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val w = f.child.asInstanceOf[Window]
     for {
       (rnAttr, ps, os) <- rowNumberOf(w)
-      (below, info) <- walkThroughLimit(w.child, ps, os)
+      info <- belowLimit(w.child, ps, os).flatMap(BaseScan.resolve).filter(_.identity)
       d <- LatestRegistry.lookup(spark, info.root).find(dd =>
         specMatches(dd, info, ps, os) &&
           info.filters.forall(keyOnly(dd, info, _)))
       above <- aboveConjuncts(f.condition, rnAttr)
-      vv <- fresh(d, info)
-      plan <- buildWindow(f, w, rnAttr, d, info, above, vv)
+      (vv, _) <- pin(d, info)
+      plan <- buildWindow(f, rnAttr, d, info, above, vv)
     } yield {
       LatestRegistry.rewrites.incrementAndGet()
       logInfo(s"graft latest-rewrite: answered a latest-per-key window over " +
@@ -265,24 +191,21 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  /** Walk the window's child to the scan, absorbing an optimizer-
-    * inferred [[WindowGroupLimit]] when its spec semantically matches
+  /** The window's child below an optimizer-inferred
+    * [[WindowGroupLimit]], absorbed when its spec semantically matches
     * the window's and its limit keeps rank 1 (a foreign spec could
     * drop the row the window ranks first — decline). */
-  private def walkThroughLimit(p: LogicalPlan, ps: Seq[Expression],
-                               os: Seq[SortOrder]): Option[(LogicalPlan, ScanInfo)] = {
-    val below = p match {
-      case wgl: WindowGroupLimit
-          if wgl.limit >= 1 &&
-            wgl.partitionSpec.length == ps.length &&
-            wgl.partitionSpec.zip(ps).forall { case (a, b) => a.semanticEquals(b) } &&
-            wgl.orderSpec.length == os.length &&
-            wgl.orderSpec.zip(os).forall { case (a, b) => a.semanticEquals(b) } =>
-        wgl.child
-      case _: WindowGroupLimit => return None
-      case other => other
-    }
-    walk(below, Nil).map(below -> _)
+  private def belowLimit(p: LogicalPlan, ps: Seq[Expression],
+                         os: Seq[SortOrder]): Option[LogicalPlan] = p match {
+    case wgl: WindowGroupLimit =>
+      if (wgl.limit >= 1 &&
+          wgl.partitionSpec.length == ps.length &&
+          wgl.partitionSpec.zip(ps).forall { case (a, b) => a.semanticEquals(b) } &&
+          wgl.orderSpec.length == os.length &&
+          wgl.orderSpec.zip(os).forall { case (a, b) => a.semanticEquals(b) })
+        Some(wgl.child)
+      else None
+    case other => Some(other)
   }
 
   /** Split the filter into the rank-1 conjunct (required), dropped
@@ -316,47 +239,26 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     else Some(rest)
   }
 
-  private def keyOnly(d: LatestRegistry.LatestDef, info: ScanInfo,
-                      e: Expression): Boolean =
+  private def keyOnly(d: LatestDef, info: BaseScan, e: Expression): Boolean =
     e.deterministic && e.references.nonEmpty && e.references.forall(ar =>
       info.colOf.get(ar.exprId).exists(p => d.keys.contains(p._1)))
 
-  private def buildWindow(f: Filter, w: Window, rnAttr: Attribute,
-                          d: LatestRegistry.LatestDef, info: ScanInfo,
+  private def buildWindow(f: Filter, rnAttr: Attribute, d: LatestDef, info: BaseScan,
                           above: Seq[Expression], viewVersion: Long): Option[LogicalPlan] = {
     val viewPlan = IncrementalLatest.readAt(spark, d.viewPath, viewVersion)
       .queryExecution.analyzed
-    def viewAttr(name: String): Option[Attribute] = viewPlan.output.find(_.name == name)
-    // every scan-level reference maps onto the view's same-named,
-    // same-typed column
-    def translate(e: Expression): Option[Expression] = {
-      var ok = true
-      val t = e.transform {
-        case ar: AttributeReference =>
-          info.colOf.get(ar.exprId).flatMap { case (n, dt) =>
-            viewAttr(n).filter(_.dataType == dt)
-          } match {
-            case Some(va) => va
-            case None => ok = false; ar
-          }
-      }
-      if (ok) Some(t) else None
-    }
+    val viewCol = RewriteSupport.byNameType(viewPlan, info.colOf) _
     // below-window KEY filters and residual above-window filters both
     // re-apply on the view verbatim
-    val conds = (info.filters ++ above).map(translate)
+    val conds = (info.filters ++ above).map(RewriteSupport.onto(_)(viewCol))
     if (conds.exists(_.isEmpty)) return None
     val filtered = conds.flatten.foldLeft(viewPlan)((p, c) => Filter(c, p))
     // the replacement reproduces the Filter node's exact output:
     // every window-child attr from the view, the rank as literal 1
-    val projList: Seq[Option[NamedExpression]] = f.output.map { a =>
+    val projList = f.output.map { a =>
       if (a.exprId == rnAttr.exprId)
         Some(Alias(Literal(1, IntegerType), a.name)(exprId = a.exprId))
-      else
-        info.colOf.get(a.exprId).flatMap { case (n, dt) =>
-          viewAttr(n).filter(_.dataType == dt)
-            .map(va => Alias(va, a.name)(exprId = a.exprId))
-        }
+      else viewCol(a.exprId).map(va => Alias(va, a.name)(exprId = a.exprId))
     }
     if (projList.exists(_.isEmpty)) None
     else Some(Project(projList.flatten, filtered))
@@ -371,21 +273,20 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => false
     })) return None
     for {
-      info <- walk(a.child, Nil)
+      info <- BaseScan.resolve(a.child).filter(_.identity)
       d <- LatestRegistry.lookup(spark, info.root).find { dd =>
         val groups = a.groupingExpressions.map(physOf(info, _))
         groups.forall(_.isDefined) && groups.flatten.toSet == dd.keys.toSet &&
           info.filters.forall(keyOnly(dd, info, _))
       }
-      vv <- fresh(d, info)
+      (vv, props) <- pin(d, info)
       // max_by skips null-ordered rows while the maintained view ranks
       // them last — the two agree only when no view row carries a null
       // ord, which is exactly what refresh's validated-at-write
       // certificate attests. An uncertified view (null ords present,
       // or written before the certificate existed) declines to the
       // scan; the window form is null-safe and rewrites regardless.
-      if ManifestTable.readPropsAt(spark, d.viewPath, vv)
-        .get(IncrementalLatest.OrdNonNullProp).contains("true")
+      if props.get(IncrementalLatest.OrdNonNullProp).contains("true")
       plan <- buildMaxBy(a, d, info, vv)
     } yield {
       LatestRegistry.rewrites.incrementAndGet()
@@ -398,8 +299,7 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   /** The aggregate's order argument is the registered comparator: the
     * single ord column, or a struct of the ord columns in exact
     * registration order. */
-  private def ordMatches(d: LatestRegistry.LatestDef, info: ScanInfo,
-                         ord: Expression): Boolean = ord match {
+  private def ordMatches(d: LatestDef, info: BaseScan, ord: Expression): Boolean = ord match {
     case ar: AttributeReference =>
       d.ordCols.size == 1 && physOf(info, ar).contains(d.ordCols.head)
     case cns: CreateNamedStruct =>
@@ -408,25 +308,13 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  private def buildMaxBy(a: Aggregate, d: LatestRegistry.LatestDef,
-                         info: ScanInfo, viewVersion: Long): Option[LogicalPlan] = {
+  private def buildMaxBy(a: Aggregate, d: LatestDef, info: BaseScan,
+                         viewVersion: Long): Option[LogicalPlan] = {
     val viewPlan = IncrementalLatest.readAt(spark, d.viewPath, viewVersion)
       .queryExecution.analyzed
-    def viewAttr(name: String): Option[Attribute] = viewPlan.output.find(_.name == name)
-    def translate(e: Expression): Option[Expression] = {
-      if (!e.deterministic) return None
-      var ok = true
-      val t = e.transform {
-        case ar: AttributeReference =>
-          info.colOf.get(ar.exprId).flatMap { case (n, dt) =>
-            viewAttr(n).filter(_.dataType == dt)
-          } match {
-            case Some(va) => va
-            case None => ok = false; ar
-          }
-      }
-      if (ok) Some(t) else None
-    }
+    val viewCol = RewriteSupport.byNameType(viewPlan, info.colOf) _
+    def translate(e: Expression): Option[Expression] =
+      if (!e.deterministic) None else RewriteSupport.onto(e)(viewCol)
     val outs: Seq[Option[NamedExpression]] = a.aggregateExpressions.map { ne =>
       val (core, name, id) = ne match {
         case al @ Alias(c, n) => (c, n, al.exprId)

@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.ops.{GraftFileIndex, IncrementalJoin, ManifestTable}
+import graft.ops.{IncrementalJoin, ManifestTable}
+import DefRegistry.{dec, enc, qualified}
 
 /** JOIN-VIEW REGISTRY — which [[IncrementalJoin]]-maintained
   * enrichment views stand for which `fact ⋈ dim` pairs. Registration
@@ -21,47 +21,25 @@ object MvJoinRegistry {
   final case class MvJoinDef(factPath: String, dimPath: String, viewPath: String,
                              joinKeys: Seq[String], joinType: String)
 
-  private val defs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Vector[MvJoinDef]]
-
-  private def keyOf(spark: SparkSession, p: String): String = {
-    val path = new Path(p)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(path).toString
-  }
-
-  private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
-
-  /** Shared catalog mechanics ([[DurableDefCatalog]]): `mv.join.NNNN`
-    * props on the FACT manifest hold the URL-encoded dim and view
-    * paths, the ','-joined key list (ORDER-STABLE — the encoded order
-    * is the registered order) and the join type; a 3-part value is an
-    * r17-era single-key inner def and decodes as such, so existing
-    * catalogs keep working. Corrupt props skip on lookup, sweep on
-    * durable unregister. */
-  private val catalog = new DurableDefCatalog[MvJoinDef](
-    graft.ops.ManifestTable.MvJoinDefPropPrefix,
+  /** `mv.join.NNNN` props on the FACT manifest hold the URL-encoded
+    * dim and view paths, the ','-joined key list (ORDER-STABLE — the
+    * encoded order is the registered order) and the join type; a
+    * 3-part value is an r17-era single-key inner def and decodes as
+    * such, so existing catalogs keep working. */
+  private val registry = new DefRegistry[(String, String), MvJoinDef](
+    ManifestTable.MvJoinDefPropPrefix, _._1, _.viewPath,
     d => Seq(enc(d.dimPath), enc(d.viewPath), d.joinKeys.mkString(","),
       d.joinType).mkString("|"),
-    (factPath, value) => try {
+    (factPath, value) => {
       val parts = value.split('|')
       val keys = parts(2).split(',').toSeq.filter(_.nonEmpty)
       val jt = if (parts.length >= 4) parts(3) else "inner"
       if (keys.isEmpty || !Set("inner", "left_outer")(jt)) None
       else Some(MvJoinDef(factPath, dec(parts(0)), dec(parts(1)), keys, jt))
-    } catch { case scala.util.control.NonFatal(_) => None },
-    (a, b) => a.viewPath == b.viewPath)
+    })
 
-  /** Single-key inner registration — the original surface. */
-  def register(spark: SparkSession, factPath: String, dimPath: String,
-               viewPath: String, joinKey: String): Unit =
-    register(spark, factPath, dimPath, viewPath, Seq(joinKey))
-
-  /** Single-key inner registration, durable. */
-  def register(spark: SparkSession, factPath: String, dimPath: String,
-               viewPath: String, joinKey: String, durable: Boolean): Unit =
-    register(spark, factPath, dimPath, viewPath, Seq(joinKey), durable = durable)
+  private def pairOf(spark: SparkSession, factPath: String, dimPath: String) =
+    (qualified(spark, new Path(factPath)), qualified(spark, new Path(dimPath)))
 
   /** A pair may carry several views (one per key list / join type);
     * the rewrite tries them in registration order. Re-registering the
@@ -82,47 +60,35 @@ object MvJoinRegistry {
     require(joinKeys.forall(k => !k.contains(',') && !k.contains('|')),
       "MvJoinRegistry.register: join keys must not contain ',' or '|'")
     val jt = IncrementalJoin.normalizeJoinType(joinType)
-    val d = MvJoinDef(factPath, dimPath, viewPath, joinKeys, jt)
-    defs.compute((keyOf(spark, factPath), keyOf(spark, dimPath)), (_, old) =>
-      Option(old).getOrElse(Vector.empty)
-        .filterNot(_.viewPath == viewPath) :+ d)
-    if (durable)
-      catalog.persist(spark, factPath, keyOf(spark, factPath), d, retainVersions)
+    registry.register(spark, pairOf(spark, factPath, dimPath), factPath,
+      MvJoinDef(factPath, dimPath, viewPath, joinKeys, jt), durable, retainVersions)
   }
 
-  /** Drop every view registered for the pair. In-memory the pair
-    * becomes an EMPTY SHADOW (a session-local disable that does NOT
-    * fall through to the manifest catalog — [[MvRegistry.unregister]]'s
-    * contract); `durable = true` also removes THIS pair's catalog
+  /** Drop every view registered for the pair (in-memory an EMPTY
+    * SHADOW); `durable = true` also removes THIS pair's catalog
     * entries for good (other dims' entries stay; corrupt ones sweep). */
   def unregister(spark: SparkSession, factPath: String, dimPath: String,
                  durable: Boolean = false,
                  retainVersions: Int = 2): Unit = {
-    val dimQ = keyOf(spark, dimPath)
-    defs.put((keyOf(spark, factPath), dimQ), Vector.empty)
-    if (durable)
-      catalog.remove(spark, factPath, keyOf(spark, factPath),
-        d => keyOf(spark, d.dimPath) == dimQ, retainVersions)
+    val pair = pairOf(spark, factPath, dimPath)
+    registry.unregister(spark, pair, factPath, durable, retainVersions,
+      d => qualified(spark, new Path(d.dimPath)) == pair._2)
   }
 
-  /** In-memory defs win (including the empty unregister shadow); a
-    * true miss falls through to the fact manifest's `mv.join.*`
-    * catalog (TTL'd version probe, per-version memo), filtered to
-    * the dim actually joined. */
+  /** The pair's defs; the durable fall-through is filtered to the dim
+    * actually joined. */
   private[plans] def lookup(spark: SparkSession, factRoot: Path,
                             dimRoot: Path): Seq[MvJoinDef] = {
-    val factQ = keyOf(spark, factRoot.toString)
-    val dimQ = keyOf(spark, dimRoot.toString)
-    Option(defs.get((factQ, dimQ))).getOrElse(
-      catalog.lookup(spark, factRoot.toString, factQ)
-        .filter(d => keyOf(spark, d.dimPath) == dimQ))
+    val pair = pairOf(spark, factRoot.toString, dimRoot.toString)
+    registry.lookup(spark, pair, factRoot.toString,
+      d => qualified(spark, new Path(d.dimPath)) == pair._2)
   }
 
-  /** Test hook: fresh-session simulation ([[MvRegistry.clearInMemory]]). */
-  private[graft] def clearInMemory(): Unit = defs.clear()
+  /** Test hook: fresh-session simulation. */
+  private[graft] def clearInMemory(): Unit = registry.clearInMemory()
 
   /** Test instrument: successful rewrites. */
-  private[graft] val rewrites = new java.util.concurrent.atomic.AtomicInteger
+  private[graft] val rewrites = registry.rewrites
 }
 
 /** AUTOMATIC JOIN-VIEW REWRITE — the query side of
@@ -142,22 +108,17 @@ object MvJoinRegistry {
   *     conjunction of attribute equalities covering EXACTLY the
   *     registered key list — single or COMPOSITE — each conjunct
   *     equating the same-named column on both sides, each side
-  *     walking to a bare, full, un-narrowed [[GraftFileIndex]] scan
-  *     of the registered fact/dim (identity Projects / SubqueryAlias
-  *     / deterministic Filters absorbed — row-per-fact-row makes a
+  *     resolving under the [[BaseScan]] absorption contract to the
+  *     registered fact/dim (row-per-fact-row makes an absorbed
   *     row-level filter commute with the join and re-apply on the
   *     view EXACTLY ... with one outer-join exception: a DIM-side
   *     filter does NOT commute with null-extension (pre-filtering the
   *     dim null-extends MORE fact rows; post-filtering the view
   *     DROPS them), so left_outer declines any dim-side filter);
-  *   - both scans are CURRENT and COMPLETE (dir-set identity against
-  *     the latest manifests — time travel, partition-filtered reads,
-  *     join-narrowed indexes, pending-MoR plans all fail this);
-  *   - the view is FRESH: its committed `join.fact_version` /
-  *     `join.dim_version` equal both current versions, checked and
-  *     then READ at the same pinned view version — and when the view
-  *     recorded its semantics (`join.type` / `join.keys`), they must
-  *     match the registered definition (defense in depth against a
+  *   - the view pins fresh against BOTH bases ([[RewriteSupport.pin]]
+  *     on `join.fact_version` / `join.dim_version`), and when the view
+  *     recorded its semantics (`join.type` / `join.keys`), they match
+  *     the registered definition (defense in depth against a
   *     mis-registered view);
   *   - every join-output column resolves in the view by name with an
   *     identical type. Under INNER both key attrs map to the view's
@@ -187,10 +148,6 @@ case class MvJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
         rewrite(j, cond).getOrElse(j)
     }
 
-  private case class Side(root: Path, idx: GraftFileIndex,
-                          colOf: Map[ExprId, (String, org.apache.spark.sql.types.DataType)],
-                          filters: Seq[Expression])
-
   private def rewrite(j: Join, cond: Expression): Option[LogicalPlan] = for {
     // every conjunct an attr=attr equality, oriented (left, right)
     pairs <- {
@@ -206,8 +163,8 @@ case class MvJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       if (oriented.exists(_.isEmpty)) None else Some(oriented.flatten)
     }
     if pairs.nonEmpty
-    left <- walk(j.left, Nil)
-    right <- walk(j.right, Nil)
+    left <- BaseScan.resolve(j.left)
+    right <- BaseScan.resolve(j.right)
     plan <- {
       // several views may stand for one pair (one per key list / join
       // type) and either side may be the registered fact — try each
@@ -258,7 +215,7 @@ case class MvJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
           .exists((dim.colOf.values.map(_._1).toSet -- mv.joinKeys))
         if (!keyed || !typeOk || !filtersOk || !unambiguous) None
         else for {
-          viewVersion <- fresh(mv, fact, dim)
+          (viewVersion, _) <- pin(mv, fact, dim)
           p <- build(j, mv, fact, dim, leftOuter, viewVersion)
         } yield {
           MvJoinRegistry.rewrites.incrementAndGet()
@@ -271,98 +228,46 @@ case class MvJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     }
   } yield plan
 
-  private def walk(p: LogicalPlan, fs: Seq[Expression]): Option[Side] = p match {
-    case lr: LogicalRelation => lr.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case g: GraftFileIndex if !g.isNarrowed =>
-          Some(Side(h.location.rootPaths.head, g,
-            lr.output.map(at => at.exprId -> (at.name, at.dataType)).toMap, fs))
-        case _ => None
-      }
-      case _ => None
+  /** Both bases pinned fresh; when the view recorded its semantics
+    * they must match the registration. Pre-r18 views (built
+    * inner/single-key) carry neither prop, so absence is acceptable
+    * ONLY for that default shape; a non-default registration
+    * (left_outer or composite key) must find the props stamped AND
+    * matching, else a mis-registered legacy view would pass freshness
+    * and serve the wrong rows. */
+  private def pin(mv: MvJoinRegistry.MvJoinDef, fact: BaseScan,
+                  dim: BaseScan): Option[(Long, Map[String, String])] =
+    RewriteSupport.pin(spark, mv.viewPath, Seq(
+        RewriteSupport.PinBase(mv.factPath, fact.idx, IncrementalJoin.FactVersionProp),
+        RewriteSupport.PinBase(mv.dimPath, dim.idx, IncrementalJoin.DimVersionProp))) {
+      props =>
+        props.get(IncrementalJoin.JoinTypeProp)
+          .fold(mv.joinType == "inner")(_ == mv.joinType) &&
+        props.get(IncrementalJoin.JoinKeysProp)
+          .fold(mv.joinKeys.size == 1)(_ == mv.joinKeys.mkString(","))
     }
-    case Project(projList, child) => walk(child, fs).map { s =>
-      s.copy(colOf = s.colOf ++ projList.flatMap {
-        case al @ Alias(ar: AttributeReference, _) =>
-          s.colOf.get(ar.exprId).map(al.exprId -> _)
-        case _ => None
-      }.toMap)
-    }
-    case f: Filter if f.condition.deterministic => walk(f.child, fs :+ f.condition)
-    case SubqueryAlias(_, child) => walk(child, fs)
-    case _ => None
-  }
-
-  /** Both scans complete+current, view folded exactly that DATA and
-    * (when recorded) with exactly the registered SEMANTICS; returns
-    * the pinned view version. Metadata-only commits on either base
-    * (constraints, the `mv.join.*` catalog write itself, sort order)
-    * bridge through data-entry identity
-    * ([[ManifestTable.sameDataEntries]]) — so durable registration
-    * order vs refresh is irrelevant. */
-  private def fresh(mv: MvJoinRegistry.MvJoinDef, fact: Side,
-                    dim: Side): Option[Long] = try {
-    val hc = spark.sparkContext.hadoopConfiguration
-    val ffs = new Path(mv.factPath).getFileSystem(hc)
-    val dfs = new Path(mv.dimPath).getFileSystem(hc)
-    val vfs = new Path(mv.viewPath).getFileSystem(hc)
-    for {
-      fCur <- ManifestTable.versions(ffs, mv.factPath).lastOption
-      dCur <- ManifestTable.versions(dfs, mv.dimPath).lastOption
-      if fact.idx.relDirs.toSet == ManifestTable.dataDirs(spark, mv.factPath, fCur)
-      if dim.idx.relDirs.toSet == ManifestTable.dataDirs(spark, mv.dimPath, dCur)
-      vv <- ManifestTable.versions(vfs, mv.viewPath).lastOption
-      props = ManifestTable.readPropsAt(spark, mv.viewPath, vv)
-      fState <- props.get(IncrementalJoin.FactVersionProp)
-      dState <- props.get(IncrementalJoin.DimVersionProp)
-      // Pre-r18 views (built inner/single-key) carry neither prop, so
-      // absence is acceptable ONLY for that default shape; a
-      // non-default registration (left_outer or composite key) must
-      // find the props stamped AND matching, else a mis-registered
-      // legacy view would pass freshness and serve the wrong rows.
-      if props.get(IncrementalJoin.JoinTypeProp)
-        .fold(mv.joinType == "inner")(_ == mv.joinType)
-      if props.get(IncrementalJoin.JoinKeysProp)
-        .fold(mv.joinKeys.size == 1)(_ == mv.joinKeys.mkString(","))
-      if ManifestTable.sameDataEntries(spark, mv.factPath, fState.toLong, fCur)
-      if ManifestTable.sameDataEntries(spark, mv.dimPath, dState.toLong, dCur)
-    } yield vv
-  } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Filter(view) → Project back to the join's output names/exprIds.
     * Under INNER both key attrs map onto the view's single key
     * column; under LEFT OUTER the dim-side key attrs map onto the
     * view's null-extended [[IncrementalJoin.dimKeyCol]] copies. */
-  private def build(j: Join, mv: MvJoinRegistry.MvJoinDef, fact: Side, dim: Side,
-                    leftOuter: Boolean, viewVersion: Long): Option[LogicalPlan] = {
+  private def build(j: Join, mv: MvJoinRegistry.MvJoinDef, fact: BaseScan,
+                    dim: BaseScan, leftOuter: Boolean,
+                    viewVersion: Long): Option[LogicalPlan] = {
     val viewPlan = ManifestTable.readVersion(spark, mv.viewPath, viewVersion)
       .queryExecution.analyzed
-    def viewAttr(name: String): Option[Attribute] = viewPlan.output.find(_.name == name)
-
-    val keySet = mv.joinKeys.toSet
-    def target(id: ExprId): Option[Attribute] = {
-      val dimKey = leftOuter &&
-        dim.colOf.get(id).exists { case (n, _) => keySet(n) }
-      (if (dimKey) dim.colOf.get(id) else fact.colOf.get(id).orElse(dim.colOf.get(id)))
-        .flatMap { case (n, dt) =>
-          viewAttr(if (dimKey) IncrementalJoin.dimKeyCol(n) else n)
-            .filter(_.dataType == dt)
-        }
+    // fact columns win over dim columns; under left_outer the dim key
+    // columns map to their null-extended copies instead
+    val dimKeys = dim.colOf.collect {
+      case (id, (n, dt)) if leftOuter && mv.joinKeys.contains(n) =>
+        id -> (IncrementalJoin.dimKeyCol(n), dt)
     }
+    val target = RewriteSupport.byNameType(viewPlan, dim.colOf ++ fact.colOf ++ dimKeys) _
 
     // under left_outer the admitted dim-side conjuncts are the
     // inferred key-isnotnull no-ops — never re-applied on the view
     val toTranslate = if (leftOuter) fact.filters else fact.filters ++ dim.filters
-    val translated = toTranslate.map { cond =>
-      var ok = true
-      val t = cond.transform {
-        case ar: AttributeReference => target(ar.exprId) match {
-          case Some(va) => va
-          case None => ok = false; ar
-        }
-      }
-      if (ok) Some(t) else None
-    }
+    val translated = toTranslate.map(RewriteSupport.onto(_)(target))
     if (translated.exists(_.isEmpty)) return None
     val filtered = translated.flatten.foldLeft(viewPlan)((p, c) => Filter(c, p))
 

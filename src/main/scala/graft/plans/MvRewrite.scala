@@ -6,11 +6,11 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   IntegerType, LongType, ShortType}
 
-import graft.ops.{GraftFileIndex, IncrementalAgg, ManifestTable}
+import graft.ops.{IncrementalAgg, ManifestTable}
+import DefRegistry.{cols, dec, enc, qualified}
 
 /** MATERIALIZED-VIEW REGISTRY — which [[IncrementalAgg]]-maintained
   * views stand for which base tables. Registration is the explicit
@@ -26,46 +26,25 @@ import graft.ops.{GraftFileIndex, IncrementalAgg, ManifestTable}
   * definition as a `mv.agg.NNNN` prop ON THE BASE TABLE'S MANIFEST —
   * the catalog entry a warehouse would keep for QUERY_REWRITE. A
   * fresh session's [[lookup]] falls through to the manifest on an
-  * in-memory miss (memoized per base version), so the rewrite
-  * survives a restart with zero re-registration — without this, a
-  * restarted pipeline gets correct results 1000× slower and nobody
-  * is told. Ordering note: the durable register is itself a manifest
-  * commit (bumps the base version), so register BEFORE the view's
-  * [[IncrementalAgg.refresh]] — freshness pins the view to the base
-  * version the refresh folded. */
+  * in-memory miss, so the rewrite survives a restart with zero
+  * re-registration — without this, a restarted pipeline gets correct
+  * results 1000× slower and nobody is told ([[DefRegistry]] holds the
+  * in-memory and durable-catalog contracts). */
 object MvRegistry {
   final case class MvDef(basePath: String, aggPath: String,
                          groupCols: Seq[String], sumCols: Seq[String],
                          minMaxCols: Seq[String] = Nil)
 
-  private val defs = new java.util.concurrent.ConcurrentHashMap[String, Vector[MvDef]]
-
-  private def keyOf(spark: SparkSession, basePath: String): String = {
-    val p = new Path(basePath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
-  }
-
-  private def enc(s: String): String =
-    java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
-
-  /** The shared catalog mechanics ([[DurableDefCatalog]]): `mv.agg.
-    * NNNN` prop values are the URL-encoded view path + the three
-    * column lists (identifiers — ',' and '|' refused at register);
-    * a corrupt prop decodes to None (skipped on lookup, swept on
-    * durable unregister). */
-  private val catalog = new DurableDefCatalog[MvDef](
-    ManifestTable.MvAggDefPropPrefix,
+  /** `mv.agg.NNNN` prop values are the URL-encoded view path + the
+    * three column lists. */
+  private val registry = new DefRegistry[String, MvDef](
+    ManifestTable.MvAggDefPropPrefix, identity, _.aggPath,
     d => Seq(enc(d.aggPath), d.groupCols.mkString(","), d.sumCols.mkString(","),
       d.minMaxCols.mkString(",")).mkString("|"),
-    (basePath, value) => try {
+    (basePath, value) => {
       val parts = value.split('|')
-      def cols(i: Int): Seq[String] =
-        if (i >= parts.length || parts(i).isEmpty) Nil else parts(i).split(',').toSeq
-      Some(MvDef(basePath, dec(parts(0)), cols(1), cols(2), cols(3)))
-    } catch { case scala.util.control.NonFatal(_) => None },
-    (a, b) => a.aggPath == b.aggPath)
+      Some(MvDef(basePath, dec(parts(0)), cols(parts, 1), cols(parts, 2), cols(parts, 3)))
+    })
 
   /** Declare `aggPath` a maintained aggregate view of `basePath`.
     * A base may carry SEVERAL views (different groupings/measures);
@@ -81,8 +60,8 @@ object MvRegistry {
     * `retainVersions` is that commit's retention horizon — pass the
     * table's own setting, exactly as for addConstraint (the catalog
     * write must not silently shorten a 10-version table's history).
-    * Registration ORDER vs refresh no longer matters: the freshness
-    * check bridges metadata-only commits by data-entry identity. */
+    * Registration ORDER vs refresh does not matter: the freshness
+    * pin bridges metadata-only commits by data-entry identity. */
   def register(spark: SparkSession, basePath: String, aggPath: String,
                groupCols: Seq[String], sumCols: Seq[String],
                minMaxCols: Seq[String] = Nil,
@@ -92,47 +71,27 @@ object MvRegistry {
     require((groupCols ++ sumCols ++ minMaxCols)
         .forall(c => !c.contains(',') && !c.contains('|')),
       "MvRegistry.register: column names must not contain ',' or '|'")
-    val d = MvDef(basePath, aggPath, groupCols, sumCols, minMaxCols)
-    defs.compute(keyOf(spark, basePath), (_, old) =>
-      Option(old).getOrElse(Vector.empty)
-        .filterNot(_.aggPath == aggPath) :+ d)
-    if (durable)
-      catalog.persist(spark, basePath, keyOf(spark, basePath), d, retainVersions)
+    registry.register(spark, qualified(spark, new Path(basePath)), basePath,
+      MvDef(basePath, aggPath, groupCols, sumCols, minMaxCols), durable, retainVersions)
   }
 
-  /** Drop every view registered for `basePath`. In-memory the entry
-    * becomes an EMPTY SHADOW, not an absence — so a session that
-    * unregisters a durably-cataloged base really does disable its
-    * rewrites locally instead of silently falling through to the
-    * manifest catalog. `durable = true` also removes the catalog
-    * props for good (and sweeps any corrupt ones). */
+  /** Drop every view registered for `basePath` (in-memory an EMPTY
+    * SHADOW); `durable = true` also removes the catalog props for
+    * good (and sweeps any corrupt ones). */
   def unregister(spark: SparkSession, basePath: String,
                  durable: Boolean = false,
-                 retainVersions: Int = 2): Unit = {
-    defs.put(keyOf(spark, basePath), Vector.empty)
-    if (durable)
-      catalog.remove(spark, basePath, keyOf(spark, basePath), _ => true,
-        retainVersions)
-  }
+                 retainVersions: Int = 2): Unit =
+    registry.unregister(spark, qualified(spark, new Path(basePath)), basePath,
+      durable, retainVersions)
 
-  /** In-memory defs win (session-local overrides, INCLUDING the
-    * empty shadow an unregister leaves); a true miss falls through to
-    * the MANIFEST catalog — TTL'd latest-version probe, props read
-    * memoized per (base, version). Prop-key order (zero-padded
-    * slots) IS the registration try order. */
-  private[plans] def lookup(spark: SparkSession, root: Path): Seq[MvDef] = {
-    val q = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(root).toString
-    Option(defs.get(q)).getOrElse(catalog.lookup(spark, root.toString, q))
-  }
+  private[plans] def lookup(spark: SparkSession, root: Path): Seq[MvDef] =
+    registry.lookup(spark, qualified(spark, root), root.toString)
 
-  /** Test hook: a fresh-session simulation — the in-memory registry
-    * (shadows included) empties, so every subsequent lookup exercises
-    * the durable path. */
-  private[graft] def clearInMemory(): Unit = defs.clear()
+  /** Test hook: fresh-session simulation. */
+  private[graft] def clearInMemory(): Unit = registry.clearInMemory()
 
   /** Test instrument: successful rewrites. */
-  private[graft] val rewrites = new java.util.concurrent.atomic.AtomicInteger
+  private[graft] val rewrites = registry.rewrites
 }
 
 /** AUTOMATIC MATERIALIZED-VIEW REWRITE — the query side of
@@ -148,20 +107,13 @@ object MvRegistry {
   * scan into a read of a few thousand pre-folded rows.
   *
   * A rewrite fires only when ALL of:
-  *   - the aggregate sits over a bare, full, un-narrowed
-  *     [[GraftFileIndex]] scan of a REGISTERED base (identity
-  *     Projects / SubqueryAlias / group-column-only deterministic
-  *     Filters between them are absorbed — a group-col filter
-  *     re-applies on the view exactly, because view rows partition
-  *     the base by group key);
-  *   - the scan is CURRENT and COMPLETE: its dir set equals the
-  *     latest manifest's ([[ManifestTable.dataDirs]]) — a time-travel
-  *     read, a partition-filtered read, a join-narrowed index, or a
-  *     pending-MoR plan (DV anti-joins surface as Joins and appendix
-  *     dirs as extra index dirs) all fail this and back off;
-  *   - the VIEW is FRESH: its committed `agg.base_version` equals the
-  *     base's current version (atomic with the view's data — one
-  *     manifest rename — so "fresh" is transactional, not advisory);
+  *   - the aggregate's child resolves under the [[BaseScan]]
+  *     absorption contract to a REGISTERED base, every absorbed
+  *     filter references group columns only (it re-applies on the
+  *     view exactly, because view rows partition the base by group
+  *     key), and computed aliases expand through `computed`;
+  *   - the view pins fresh ([[RewriteSupport.pin]] on
+  *     `agg.base_version`);
   *   - every grouping expression is a DETERMINISTIC function of the
   *     registered group columns — bare attrs (subset roll-up) or
   *     expressions (`GROUP BY date_trunc('month', day)` over a
@@ -182,9 +134,8 @@ object MvRegistry {
   *     matches the view's bit-for-bit.
   *
   * The global (no GROUP BY) count re-folds as `coalesce(sum(n), 0)` —
-  * an empty base must still answer 0, not NULL. Injected pre-CBO;
-  * the freshness check is one driver-side manifest read per candidate
-  * aggregate, no job. `spark.graft.mvRewrite.enabled=false` turns the
+  * an empty base must still answer 0, not NULL. Injected pre-CBO.
+  * `spark.graft.mvRewrite.enabled=false` turns the
   * rule off; [[MvRegistry.rewrites]] counts successes. */
 case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -201,25 +152,15 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case a: Aggregate => rewrite(a).getOrElse(a)
     }
 
-  /** What the walk below the Aggregate found: the scan's index+root,
-    * exprId → physical column name/type, COMPUTED alias expressions
-    * resolved down to scan-level attrs (the optimizer's
-    * PullOutGroupingExpressions moves complex groupings into a
-    * Project below the Aggregate as `_groupingexpression#N` — the
-    * derived map lets [[build]] expand those back), and the filters
-    * to re-apply on the view. */
-  private case class ScanInfo(root: Path, idx: GraftFileIndex,
-                              colOf: Map[ExprId, (String, org.apache.spark.sql.types.DataType)],
-                              derived: Map[ExprId, Expression],
-                              filters: Seq[Expression])
-
   private def rewrite(a: Aggregate): Option[LogicalPlan] =
-    walk(a.child, Nil).flatMap { info =>
+    BaseScan.resolve(a.child).flatMap { info =>
       // several views may stand for one base — first match in
       // registration order wins (register most-specific first)
       MvRegistry.lookup(spark, info.root).view.flatMap { mv =>
         for {
-          viewVersion <- fresh(mv, info)
+          (viewVersion, _) <- RewriteSupport.pin(spark, mv.aggPath,
+            Seq(RewriteSupport.PinBase(mv.basePath, info.idx, IncrementalAgg.BaseVersionProp)))(
+            _ => true) // this family records no semantics props
           plan <- build(a, mv, info, viewVersion)
         } yield {
           MvRegistry.rewrites.incrementAndGet()
@@ -230,112 +171,35 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }.headOption
     }
 
-  /** Descend to the scan, absorbing identity Projects and deterministic
-    * Filters (kept for later translation — their references are
-    * validated against the group columns in [[build]]). */
-  private def walk(p: LogicalPlan, fs: Seq[Expression]): Option[ScanInfo] = p match {
-    case lr: LogicalRelation => lr.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case g: GraftFileIndex if !g.isNarrowed =>
-          Some(ScanInfo(lr.relation.asInstanceOf[HadoopFsRelation].location
-            .rootPaths.head, g,
-            lr.output.map(at => at.exprId -> (at.name, at.dataType)).toMap,
-            Map.empty, fs))
-        case _ => None
-      }
-      case _ => None
-    }
-    case Project(projList, child) => walk(child, fs).flatMap { info =>
-      val m = projList.flatMap {
-        case al @ Alias(ar: AttributeReference, _) =>
-          info.colOf.get(ar.exprId).map(al.exprId -> _)
-        case _ => None
-      }.toMap
-      // COMPUTED aliases (incl. the optimizer's _groupingexpression#N
-      // pull-outs) record their defining expression resolved down to
-      // scan-level attrs, so translate() can expand them
-      val d = projList.flatMap {
-        case al @ Alias(e, _)
-            if !e.isInstanceOf[AttributeReference] && e.deterministic =>
-          Some(al.exprId -> e.transform {
-            case ar: AttributeReference => info.derived.getOrElse(ar.exprId, ar)
-          })
-        case _ => None
-      }.toMap
-      // filters collected ABOVE this project reference the outer ids;
-      // remap is implicit because colOf carries every live id
-      Some(info.copy(colOf = info.colOf ++ m, derived = info.derived ++ d))
-    }
-    case f: Filter if f.condition.deterministic => walk(f.child, fs :+ f.condition)
-    case SubqueryAlias(_, child) => walk(child, fs)
-    case _ => None
-  }
-
-  /** The scan is the complete current base AND the view has folded
-    * exactly that data. Returns the VIEW version whose committed
-    * `agg.base_version` was verified — [[build]] reads exactly that
-    * version, so a refresh racing the planner can neither serve an
-    * unverified snapshot nor tear between check and read. Freshness
-    * BRIDGES metadata-only commits ([[ManifestTable.sameDataEntries]]):
-    * a constraint/catalog/sort-order commit after the refresh bumps
-    * the base version without touching a data entry, and must not
-    * disarm the rewrite — in particular, `register(durable = true)`
-    * is itself such a commit, so registration order vs refresh is
-    * irrelevant. Driver-side metadata only. */
-  private def fresh(mv: MvRegistry.MvDef, info: ScanInfo): Option[Long] = try {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bfs = new Path(mv.basePath).getFileSystem(conf)
-    val vfs = new Path(mv.aggPath).getFileSystem(conf)
-    for {
-      cur <- ManifestTable.versions(bfs, mv.basePath).lastOption
-      if info.idx.relDirs.toSet == ManifestTable.dataDirs(spark, mv.basePath, cur)
-      vv <- ManifestTable.versions(vfs, mv.aggPath).lastOption
-      state <- ManifestTable.readPropsAt(spark, mv.aggPath, vv)
-        .get(IncrementalAgg.BaseVersionProp)
-      if ManifestTable.sameDataEntries(spark, mv.basePath, state.toLong, cur)
-    } yield vv
-  } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Construct the replacement: Filter(view) → Aggregate → Project
     * aliasing back to the original output names and exprIds. Any
     * unmappable piece answers None (back off, never fail). */
   private def build(a: Aggregate, mv: MvRegistry.MvDef,
-                    info: ScanInfo, viewVersion: Long): Option[LogicalPlan] = {
+                    info: BaseScan, viewVersion: Long): Option[LogicalPlan] = {
     val viewPlan = IncrementalAgg.readAt(spark, mv.aggPath, viewVersion)
       .queryExecution.analyzed
     def viewAttr(name: String): Option[Attribute] = viewPlan.output.find(_.name == name)
+    val viewCol = RewriteSupport.byNameType(viewPlan, info.colOf) _
 
     def physOf(e: Expression): Option[String] = e match {
       case ar: AttributeReference => info.colOf.get(ar.exprId).map(_._1)
       case _ => None
     }
-    // Translate an expression onto the view: every referenced
-    // attribute must map to a REGISTERED GROUP COLUMN (such an
-    // expression is constant within each view row-group, so grouping
-    // or filtering by it commutes with the view's pre-aggregation —
-    // the soundness of both the expression-grouping roll-up, e.g.
-    // `GROUP BY date_trunc('month', day)` over a day-grained view,
-    // and the filter re-application).
+    // Translate an expression onto the view: computed aliases
+    // (pulled-out grouping expressions) expand first, then every
+    // referenced attribute must map to a REGISTERED GROUP COLUMN (such
+    // an expression is constant within each view row-group, so
+    // grouping or filtering by it commutes with the view's
+    // pre-aggregation — the soundness of both the expression-grouping
+    // roll-up, e.g. `GROUP BY date_trunc('month', day)` over a
+    // day-grained view, and the filter re-application).
     def translate(e: Expression): Option[Expression] = {
-      // expand computed aliases (pulled-out grouping expressions)
-      // down to scan-level attrs first, then map those onto the view
       val resolved = e.transform {
-        case ar: AttributeReference => info.derived.getOrElse(ar.exprId, ar)
+        case ar: AttributeReference => info.computed.getOrElse(ar.exprId, ar)
       }
-      if (!resolved.deterministic) return None
-      var ok = true
-      val t = resolved.transform {
-        case ar: AttributeReference =>
-          info.colOf.get(ar.exprId).map(_._1) match {
-            case Some(c) if mv.groupCols.contains(c) =>
-              viewAttr(c) match {
-                case Some(va) if va.dataType == ar.dataType => va
-                case _ => ok = false; ar
-              }
-            case _ => ok = false; ar
-          }
-      }
-      if (ok) Some(t) else None
+      if (!resolved.deterministic) None
+      else RewriteSupport.onto(resolved)(id =>
+        viewCol(id).filter(va => mv.groupCols.contains(va.name)))
     }
 
     // grouping: any deterministic expressions over group columns
@@ -582,7 +446,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * — O(entries) driver arithmetic, no job, the [[StatsAggRule]]
     * machinery applied to an optimizer soundness proof. Any entry
     * missing stats, null counts, or a rowcount fails the proof. */
-  private def avgExactProof(info: ScanInfo, c: String): Boolean = {
+  private def avgExactProof(info: BaseScan, c: String): Boolean = {
     val entries = info.idx.entryMetas
     // NULLS need no clause of their own any more: the view maintains
     // count(v) per group (cnt_<c>), so the divide's denominator is

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
 import graft.ops.GraftFileIndex
@@ -29,20 +28,16 @@ import graft.ops.GraftFileIndex
   * a false fast-path answer is a wrong result, so every condition
   * below is load-bearing):
   *
-  *   - The aggregate must be GLOBAL (no grouping) and sit over a bare
-  *     [[GraftFileIndex]] scan reached through Project-of-attributes /
-  *     identity aliases / SubqueryAlias ONLY. The one admissible
-  *     Filter family is partition-key selection (`pcol = lit` /
-  *     `pcol IN (…)` / `pcol <op> lit` range conjunctions on the
-  *     committed partition column), which keeps entries
+  *   - The aggregate must be GLOBAL (no grouping) and its child must
+  *     resolve under the [[BaseScan]] absorption contract (or be a
+  *     Union of such branches over one table — [[resolveScan]]).
+  *     Absorbed filters must be partition-key selection (`pcol = lit`
+  *     / `pcol IN (…)` / `pcol <op> lit` range conjunctions on the
+  *     committed partition column, or any deterministic pcol-only
+  *     predicate — [[narrow]]), which keeps entries
   *     whole-or-not-at-all, so `count(*) … WHERE day >= '…'` stays
   *     metadata-only (`count(DISTINCT pcol)` also answers — it is the
-  *     number of surviving non-empty entry keys); any other
-  *     node — other Filters, Union, Join — stops the walk. This is
-  *     not just simplicity: the reader composes DV anti-joins,
-  *     shared-dir row filters, and MoR appendix unions into the plan
-  *     whenever they apply, so "the plan is a bare scan" certifies
-  *     "footer stats describe exactly the scan's rows".
+  *     number of surviving non-empty entry keys).
   *   - `count(*)` needs every entry's committed `__rowcount`;
   *     `count(col)` additionally needs the column's committed null
   *     count in every entry (a file not storing the column poisons the
@@ -62,10 +57,8 @@ import graft.ops.GraftFileIndex
   *     row count) contributes nothing, matching SQL min/max null
   *     semantics; an entry with no zone map and no all-null proof
   *     backs off.
-  *   - A join-narrowed index ([[JoinPruneRule]]) never qualifies (its
-  *     dir set is only valid under the join), and zone-map bounds are
-  *     only trusted when the bound converts EXACTLY to the column's
-  *     type.
+  *   - Zone-map bounds are only trusted when the bound converts
+  *     EXACTLY to the column's type.
   *
   * Injected as a PRE-CBO rule like [[JoinPruneRule]]; pure driver-side
   * metadata arithmetic, O(entries), no job. The rewrite keeps the
@@ -455,85 +448,31 @@ case class StatsAggRule(spark: SparkSession)
     * every branch must share the table root and partition column. */
   private def resolveScan(p: LogicalPlan): Option[ResolvedScan] = p match {
     case u: Union =>
-      val branches = u.children.map(resolveBranch)
+      val branches = u.children.map(BaseScan.resolve)
       if (branches.exists(_.isEmpty)) None
       else {
         val bs = branches.flatten
-        val shape = bs.head._1.output.map(a => (a.name, a.dataType))
-        val sameShape = bs.forall(_._1.output.map(a => (a.name, a.dataType)) == shape)
-        val roots = bs.map(_._2.rootPaths.headOption).distinct
-        val pcols = bs.map(_._2.partitionColName).distinct
+        val shape = u.children.head.output.map(a => (a.name, a.dataType))
+        val sameShape = u.children.forall(_.output.map(a => (a.name, a.dataType)) == shape)
+        val roots = bs.map(_.idx.rootPaths.headOption).distinct
+        val pcols = bs.map(_.idx.partitionColName).distinct
         if (!sameShape || roots.size != 1 || pcols.size != 1) None
         else {
-          val narrowed = bs.map { case (_, idx, colOf, aliasOf, filters) =>
-            narrow(idx.entryMetas, idx.partitionColName, colOf, aliasOf, filters,
-              idx.writerTz)
-          }
+          val narrowed = bs.map(narrowBranch)
           if (narrowed.exists(_.isEmpty)) None
-          else {
-            val (_, headIdx, headCols, headAliases, _) = bs.head
-            Some(ResolvedScan(narrowed.flatten.flatten,
-              headIdx.partitionColName, headCols, headAliases, headIdx.writerTz))
-          }
+          else Some(ResolvedScan(narrowed.flatten.flatten, bs.head.idx.partitionColName,
+            bs.head.colOf, bs.head.computed, bs.head.idx.writerTz))
         }
       }
-    case other => resolveBranch(other).flatMap { case (_, idx, colOf, aliasOf, filters) =>
-      narrow(idx.entryMetas, idx.partitionColName, colOf, aliasOf, filters,
-          idx.writerTz)
-        .map(ResolvedScan(_, idx.partitionColName, colOf, aliasOf, idx.writerTz))
+    case other => BaseScan.resolve(other).flatMap { s =>
+      narrowBranch(s).map(ResolvedScan(_, s.idx.partitionColName, s.colOf, s.computed,
+        s.idx.writerTz))
     }
   }
 
-  /** Walk one branch to a bare, un-narrowed [[GraftFileIndex]] scan,
-    * carrying the exprId → physical-column-name mapping through
-    * identity Projects (the reader's rename layer is
-    * `Alias(AttributeReference)`), recording NON-IDENTITY
-    * deterministic aliases (the analyzer pulls a computed grouping
-    * below the Aggregate as a `_groupingexpression` alias —
-    * [[rewriteGrouped]] adjudicates and evaluates them; an aggregate
-    * referencing one simply fails its colOf lookup and backs off),
-    * and collecting deterministic Filters for [[narrow]] to
-    * adjudicate. Recorded alias expressions are pre-inlined to
-    * scan-level references, so one transform resolves a grouping
-    * fully. Any other operator answers None. */
-  private def resolveBranch(p: LogicalPlan)
-      : Option[(LogicalPlan, GraftFileIndex, Map[ExprId, (String, DataType)],
-                Map[ExprId, Expression], Seq[Expression])] =
-    p match {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location match {
-          case g: GraftFileIndex if !g.isNarrowed =>
-            Some((p, g, lr.output.map(a => a.exprId -> (a.name, a.dataType)).toMap,
-              Map.empty, Nil))
-          case _ => None
-        }
-        case _ => None
-      }
-      case Project(projList, child) => resolveBranch(child).map { case (_, g, m, ax, f) =>
-        // MERGE the alias mappings rather than replace: a Filter
-        // below this Project references scan-level ids that must
-        // stay resolvable (exprIds are globally unique, no clashes)
-        val ids = m ++ projList.flatMap {
-          case al @ Alias(ar: AttributeReference, _) => m.get(ar.exprId).map(al.exprId -> _)
-          case _ => None // non-alias outputs simply aren't resolvable
-        }.toMap
-        val exprs = ax ++ projList.flatMap {
-          case al @ Alias(child, _)
-              if !child.isInstanceOf[AttributeReference] && child.deterministic =>
-            Some(al.exprId -> child.transformUp {
-              case ar: AttributeReference if ax.contains(ar.exprId) => ax(ar.exprId)
-            })
-          case _ => None
-        }.toMap
-        (p, g, ids, exprs, f)
-      }
-      case f: Filter if f.condition.deterministic =>
-        resolveBranch(f.child).map { case (_, g, m, ax, fs) =>
-          (p, g, m, ax, fs :+ f.condition) }
-      case SubqueryAlias(_, child) =>
-        resolveBranch(child).map { case (_, g, m, ax, fs) => (p, g, m, ax, fs) }
-      case _ => None
-    }
+  private def narrowBranch(s: BaseScan): Option[Seq[GraftFileIndex.EntryMeta]] =
+    narrow(s.idx.entryMetas, s.idx.partitionColName, s.colOf, s.computed, s.filters,
+      s.idx.writerTz)
 
   /** Absorb the collected filters into an ENTRY subset, or back off.
     * Every row of an entry carries the entry's partition value, so

@@ -85,6 +85,39 @@ class LatestRewriteSpec extends AnyFunSuite {
     } finally LatestRegistry.unregister(spark, base)
   }
 
+  test("both forms still rewrite under ANSI mode and a DST session time " +
+    "zone, with rules-off rows") {
+    val (base, view) = fresh("ansi_tz")
+    seed(base)
+    IncrementalLatest.refresh(spark, base, view, Seq("asset"), Seq("ts", "id"))
+    LatestRegistry.register(spark, base, view, Seq("asset"), Seq("ts", "id"))
+    try SparkTestSession.withConf(SparkTestSession.AnsiLosAngeles) {
+      val (d1, _, rows1) = run(windowQ(base))
+      assert(d1 == 1, s"expected one latest rewrite, saw $d1")
+      assert(rows1 == truth(windowQ(base)))
+      val (d2, _, rows2) = run(aggQ(base))
+      assert(d2 == 1, s"expected one max_by rewrite, saw $d2")
+      assert(rows2 == truth(aggQ(base)))
+    } finally LatestRegistry.unregister(spark, base)
+  }
+
+  test("a computed column below the window DECLINES and answers like the scan") {
+    val (base, view) = fresh("computed")
+    seed(base)
+    IncrementalLatest.refresh(spark, base, view, Seq("asset"), Seq("ts", "id"))
+    LatestRegistry.register(spark, base, view, Seq("asset"), Seq("ts", "id"))
+    try {
+      def q = Ops.latestPerKey(
+        ManifestTable.read(spark, base).withColumn("p2", col("price") * 2),
+        Seq("asset"), Seq(col("ts"), col("id")))
+        .select(col("asset"), col("ts"), col("p2")).orderBy(col("asset"))
+      val (d, r, rows) = run(q)
+      assert(d == 0 && r.exists(_.contains("/base")),
+        s"a computed Project below the window must DECLINE: delta=$d roots=$r")
+      assert(rows == truth(q))
+    } finally LatestRegistry.unregister(spark, base)
+  }
+
   test("a KEY filter below the window re-applies on the view; a non-key " +
     "filter below declines (it changes which row is latest)") {
     val (base, view) = fresh("filters")

@@ -55,7 +55,7 @@ class MvJoinSpec extends AnyFunSuite {
     "— neither base scanned — with join-identical rows, filters absorbed") {
     val (fact, dim, view) = fresh("basic")
     seed(fact, dim, view)
-    MvJoinRegistry.register(spark, fact, dim, view, "uid")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
     try {
       def q = ManifestTable.read(spark, fact)
         .join(ManifestTable.read(spark, dim), Seq("uid"))
@@ -81,11 +81,26 @@ class MvJoinSpec extends AnyFunSuite {
     } finally MvJoinRegistry.unregister(spark, fact, dim)
   }
 
+  test("a filtered inner fact⋈dim still rewrites under ANSI mode and a DST " +
+    "session time zone, with rules-off rows") {
+    val (fact, dim, view) = fresh("ansi_tz")
+    seed(fact, dim, view)
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
+    try SparkTestSession.withConf(SparkTestSession.AnsiLosAngeles) {
+      def qf = ManifestTable.read(spark, fact).where(col("v") > 30L)
+        .join(ManifestTable.read(spark, dim).where(col("seg") === "seg-1"), Seq("uid"))
+        .select(col("id"), col("seg"))
+      val (d, r, rows) = run(qf)
+      assert(d == 1 && !r.exists(_.endsWith("/fact")), s"delta=$d roots=$r")
+      assert(rows == truth(qf))
+    } finally MvJoinRegistry.unregister(spark, fact, dim)
+  }
+
   test("staleness on EITHER side falls back: a dim update un-rewrites until " +
     "refresh; fact appends likewise") {
     val (fact, dim, view) = fresh("stale")
     seed(fact, dim, view)
-    MvJoinRegistry.register(spark, fact, dim, view, "uid")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
     try {
       def q = ManifestTable.read(spark, fact)
         .join(ManifestTable.read(spark, dim), Seq("uid"))
@@ -116,7 +131,7 @@ class MvJoinSpec extends AnyFunSuite {
     val aggView = view + "_agg"
     seed(fact, dim, view)
     graft.ops.IncrementalAgg.refresh(spark, view, aggView, Seq("seg"), Seq("v"))
-    MvJoinRegistry.register(spark, fact, dim, view, "uid")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
     graft.plans.MvRegistry.register(spark, view, aggView, Seq("seg"), Seq("v"))
     try {
       def q = ManifestTable.read(spark, fact)
@@ -149,7 +164,7 @@ class MvJoinSpec extends AnyFunSuite {
     ManifestTable.merge(spark, fact, f, Seq("id"), "day", statsColumns = Seq("uid"))
     ManifestTable.merge(spark, dim, dm, Seq("uid"), "du")
     IncrementalJoin.refresh(spark, fact, dim, view, Seq("id"), "uid", "day")
-    MvJoinRegistry.register(spark, fact, dim, view, "uid")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
     try {
       // make the view STALE (dim moves on)
       ManifestTable.merge(spark, dim,
@@ -187,7 +202,7 @@ class MvJoinSpec extends AnyFunSuite {
       f.join(d, Seq("uid")).select(col("id"), col("seg"))
     // unregistered
     assert(run(q(ManifestTable.read(spark, fact), ManifestTable.read(spark, dim)))._1 == 0)
-    MvJoinRegistry.register(spark, fact, dim, view, "uid")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
     try {
       val (f, d) = (ManifestTable.read(spark, fact), ManifestTable.read(spark, dim))
       // join on a NON-registered key never rewrites
@@ -217,7 +232,7 @@ class MvJoinSpec extends AnyFunSuite {
     ManifestTable.merge(spark, dim, dm, Seq("uid"), "du")
     // register BEFORE refresh (the durable register bumps the fact
     // version; freshness pins the versions the refresh folded)
-    MvJoinRegistry.register(spark, fact, dim, view, "uid", durable = true)
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"), durable = true)
     IncrementalJoin.refresh(spark, fact, dim, view, Seq("id"), "uid", "day")
     def q = ManifestTable.read(spark, fact)
       .join(ManifestTable.read(spark, dim), Seq("uid"))

@@ -99,6 +99,23 @@ class MvRewriteSpec extends AnyFunSuite {
     } finally MvRegistry.unregister(spark, base)
   }
 
+  test("a filtered roll-up still rewrites under ANSI mode and a DST session " +
+    "time zone, with rules-off rows") {
+    val (base, view) = fresh("ansi_tz")
+    seed(base)
+    IncrementalAgg.refresh(spark, base, view, Seq("etype", "u10"), Seq("v"))
+    MvRegistry.register(spark, base, view, Seq("etype", "u10"), Seq("v"))
+    try SparkTestSession.withConf(SparkTestSession.AnsiLosAngeles) {
+      def roll = ManifestTable.read(spark, base)
+        .where(col("u10") >= 3).groupBy(col("etype"))
+        .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
+        .orderBy(col("etype"))
+      val (d, r, rows) = run(roll)
+      assert(d == 1 && !r.exists(_.contains("/base")), s"delta=$d roots=$r")
+      assert(rows == truth(roll))
+    } finally MvRegistry.unregister(spark, base)
+  }
+
   test("staleness is transactional: a base merge un-rewrites the query until " +
     "refresh() folds the delta back in") {
     val (base, view) = fresh("stale")

@@ -10,6 +10,24 @@ object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.builder("4")
     .appName("graft-test")
     .getOrCreate()
+
+  /** A session config the rewrites must not depend on: ANSI mode with
+    * a DST time zone. */
+  val AnsiLosAngeles: Seq[(String, String)] = Seq(
+    "spark.sql.ansi.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "America/Los_Angeles")
+
+  /** Run `body` with `confs` set on the shared session, restoring the
+    * previous values afterwards. */
+  def withConf[T](confs: Seq[(String, String)])(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 class OpsSpec extends AnyFunSuite {

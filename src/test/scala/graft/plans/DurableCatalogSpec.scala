@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.ManifestTable
 
-/** [[DurableDefCatalog]] failure-path contract: a TRANSIENT manifest
-  * read failure must degrade one lookup (fall back to the scan —
-  * correct by construction) and be RETRIED on the next, never
+/** [[DefRegistry]] durable-catalog failure-path contract: a TRANSIENT
+  * manifest read failure must degrade one lookup (fall back to the
+  * scan — correct by construction) and be RETRIED on the next, never
   * memoized — caching the failure as "no defs" would silently disable
   * every durable MV rewrite for that (base, version) until the
   * version bumps, a long-lived perf regression on a stable table. */
